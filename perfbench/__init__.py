@@ -1,0 +1,1 @@
+"""Crawl benchmark: see README.md in this directory."""
